@@ -1,4 +1,4 @@
-"""Pure-Python image codecs for the validation invariant.
+"""Image codecs for the validation invariant.
 
 The north-rule invariant (BASELINE.json ``input_hint``) is: decoded pixels
 must be allclose to ground truth (PSNR >= 40 dB for lossy formats) and the
@@ -6,24 +6,36 @@ caption must match exactly. The reference's analogous external check is the
 ``hubCheck`` binary subprocess (``trackhubs/tasks.py``); here the decoder is
 in-process and Arrow-batched.
 
-This container has no image libraries (no PIL / cv2 / imageio), so:
+Every codec is implemented in this package from the public specs, with no
+image library (no PIL / cv2 / imageio):
 
-* ``png`` is a REAL codec — a minimal but spec-correct PNG encoder/decoder
-  (8-bit RGB, all five scanline filters on decode, filter 0 on encode)
-  built on stdlib ``zlib``/``struct`` + numpy. Lossless round-trip.
-* ``jpeg`` is a REAL codec — baseline JFIF (T.81) implemented from the
-  public spec in ``images/jpeg.py`` (DCT + Annex-K quantization + Huffman
-  entropy coding, readable by any standard decoder). Lossy: at the
-  default quality (98) quantization bounds the error well above the
-  40 dB PSNR invariant threshold for in-gamut content.
-* ``webp`` is a REAL codec — lossless WebP (RIFF/VP8L per RFC 9649) in
-  ``images/vp8l.py``: canonical prefix codes, LZ77 + color cache, and
-  the full transform set. Lossless round-trip (PSNR infinite), encoded
-  streams carry the standard RIFF/WEBP container. Lossy VP8 intra
-  coding is NOT implemented (rejected with ``ValueError``).
+* ``png`` — a minimal but spec-correct PNG encoder/decoder (8-bit RGB,
+  all five scanline filters on decode, filter 0 on encode) built on
+  stdlib ``zlib``/``struct`` + numpy. Lossless round-trip.
+* ``jpeg`` — baseline and progressive JFIF (T.81) in ``images/jpeg.py``
+  (DCT + Annex-K quantization + Huffman entropy coding, readable by any
+  standard decoder). Lossy: at the default quality (98) quantization
+  bounds the error well above the 40 dB PSNR invariant threshold for
+  in-gamut content.
+* ``webp`` — the RIFF/WEBP container with either a lossless VP8L chunk
+  (RFC 9649, ``images/vp8l.py``: canonical prefix codes, LZ77 + color
+  cache, the full transform set) or a lossy VP8 key frame (RFC 6386,
+  ``images/vp8.py``, bit-exact in YUV against libwebp).
 * The quantize-then-deflate ``FAKL`` container remains ONLY as the
   carrier for planted unknown-fmt rows (``bmp``) and as the
   lossy-error model in property tests; no real fmt maps to it anymore.
+
+Native fast path (``images/native.py``): ``decode_image`` entropy-decodes
+baseline JPEG scans in a small C port of the Python scan loop (compiled
+with the system ``gcc`` on first use, cached under
+``tempfile.gettempdir()/dcc-validate-native-<uid>/``) and hands WebP
+bitstreams to the system libwebp. The pixels are identical to the Python
+decoders' by construction: the same coefficients feed the same numpy JPEG
+tail, VP8 YUV is bit-exact and VP8L is lossless. All header gates run in
+Python first, and whatever the native code refuses is re-decoded in
+Python, so decode-failure messages are unchanged. Without ``gcc`` or
+libwebp every row stays on the Python path. ``_decode_image_python`` is
+the pure-Python decode, kept for the independent golden.
 
 All functions are numpy-vectorized per image; the Spark layer batches them
 via Arrow (``images/invariants.py``) — no per-row Python in the plan.
@@ -37,6 +49,7 @@ import zlib
 import numpy as np
 
 from . import jpeg as _jpeg
+from . import native as _native
 from . import vp8 as _vp8
 from . import vp8l as _vp8l
 
@@ -193,13 +206,26 @@ def encode_image(pixels: np.ndarray, fmt: str) -> bytes:
 
 
 def decode_image(data: bytes) -> tuple[np.ndarray, str]:
-    """Sniff-and-decode. Returns (pixels, container_fmt)."""
+    """Sniff-and-decode. Returns (pixels, container_fmt). JPEG and WebP
+    use the native fast path where it loads (module docstring)."""
+    return _decode_image(data, native=True)
+
+
+def _decode_image_python(data: bytes) -> tuple[np.ndarray, str]:
+    """``decode_image`` on the pure-Python decoders only: the oracle that
+    the native path is checked against (golden violations, tests)."""
+    return _decode_image(data, native=False)
+
+
+def _decode_image(data: bytes, native: bool) -> tuple[np.ndarray, str]:
     if data[:8] == _PNG_SIG:
         return decode_png(data), "png"
     if data[:3] == _JPEG_SIG:
-        return _jpeg.decode_jpeg(data), "jpeg"
+        scan_fn = _native.jpeg_scan() if native else None
+        return _jpeg._decode_jpeg(data, scan_fn), "jpeg"
     if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-        return _vp8l.decode_webp(data), "webp"
+        webp = _native.libwebp() if native else None
+        return _vp8l._decode_webp(data, webp), "webp"
     if data[:4] == _FAKE_MAGIC:
         return decode_lossy(data)
     raise ValueError("unrecognized image container")

@@ -2,7 +2,10 @@
 
 The ONLY per-row Python in the engine, confined to ``mapInPandas`` over
 Arrow batches (capped via ``spark.sql.execution.arrow.maxRecordsPerBatch``
-because binary cells inflate batches — SURVEY.md §7.3). Two entry points:
+because binary cells inflate batches — SURVEY.md §7.3). Each row is
+decoded by ``codec.decode_image``, which runs the JPEG/WebP bitstream
+decode natively where it can (``images/native.py``) with the same pixels
+and messages as the pure-Python decoders. Three entry points:
 
 * ``decode_check_violations`` — self-contained structural checks: bytes
   decode, decoded dims == declared (w, h), container format == declared
@@ -73,7 +76,9 @@ def decode_check_violations(
     the presence check, or its scan would read the binary column just for
     ``isNotNull`` (this branch is the only one allowed to scan ``bytes``)."""
     keep = list(keep_cols)
-    needed = list(dict.fromkeys(keep + ["bytes", "w", "h", "fmt"]))
+    # _rebalance partitions on image_id, so it must survive the projection
+    key = ["image_id"] if rebalance else []
+    needed = list(dict.fromkeys(keep + key + ["bytes", "w", "h", "fmt"]))
     src = _rebalance(df.select(*needed), rebalance)
     schema = _viol_schema(keep, df)
 

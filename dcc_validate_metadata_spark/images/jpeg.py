@@ -41,6 +41,7 @@ from functools import lru_cache
 
 import numpy as np
 
+from . import native as _native
 from .limits import check_pixel_budget
 
 # ---------------------------------------------------------------------------
@@ -241,6 +242,14 @@ def _decode_lut(bits_vals: tuple[bytes, bytes]) -> list[int]:
         for i in range(lo, hi):
             lut[i] = entry
     return lut
+
+
+@lru_cache(maxsize=32)
+def _native_lut(bits_vals: tuple[bytes, bytes]) -> tuple[np.ndarray, int]:
+    """``_decode_lut`` as a uint16 array for the C scan decoder, with its
+    address (entries fit: code length <= 16, symbol <= 255)."""
+    lut = np.array(_decode_lut(bits_vals), dtype=np.uint16)
+    return lut, lut.ctypes.data
 
 
 # ---------------------------------------------------------------------------
@@ -798,6 +807,29 @@ def _decode_scan(
     return consumed
 
 
+def _native_decode_scan(
+    scan_fn,
+    data: bytes,
+    scan_start: int,
+    scan_comps: list[tuple[_Component, int, tuple, tuple]],
+    blocks_geom: list[tuple[int, int, int, int]],
+    n_units: int,
+    restart_interval: int,
+) -> int:
+    """``_decode_scan`` in C (``jpeg_scan.c``): same arguments, except
+    the scan is ``data[scan_start:]``, the LUTs are ``_native_lut``
+    entries and each component's ``coefs`` is an int32 array. Raises
+    ``native.Declined`` wherever the C port refuses the scan."""
+    params = [n_units, restart_interval, len(scan_comps)]
+    for (c, _ci, (_dc, dc_addr), (_ac, ac_addr)), geom in zip(scan_comps, blocks_geom):
+        params += [c.coefs.ctypes.data, c.coefs.size, *geom, dc_addr, ac_addr]
+    params_arr = np.array(params, dtype=np.int64)
+    consumed = scan_fn(data, len(data), scan_start, params_arr.ctypes.data)
+    if consumed < 0:
+        raise _native.Declined
+    return consumed
+
+
 def _decode_progressive_scan(
     scan_bytes: bytes,
     scan_comps: list[tuple[_Component, int, list[int] | None, list[int] | None]],
@@ -991,26 +1023,42 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     fully-interleaved scans, per-component non-interleaved scans
     (multi-SOS), progressive spectral selection + successive
     approximation (SOF2), sampling factors up to 2x2, DRI/RSTn. Raises
-    ``ValueError`` on malformed/unsupported input."""
+    ``ValueError`` on malformed/unsupported input.
+
+    Baseline scans are entropy-decoded in C when ``native.jpeg_scan()``
+    is available; a scan the C port refuses sends the whole stream back
+    through the pure-Python decoder."""
+    return _decode_jpeg(data, _native.jpeg_scan())
+
+
+def _decode_jpeg(data: bytes, scan_fn) -> np.ndarray:
+    """``decode_jpeg`` with an explicit native scan decoder (None: the
+    pure-Python decoder only)."""
     try:
-        return _decode_jpeg_inner(data)
+        if scan_fn is not None:
+            try:
+                return _decode_jpeg_inner(bytes(data), scan_fn)
+            except _native.Declined:
+                pass
+        return _decode_jpeg_inner(data, None)
     except (ValueError, struct.error, IndexError, KeyError) as exc:
         raise ValueError(f"bad JPEG: {exc}") from exc
 
 
-def _decode_jpeg_inner(data: bytes) -> np.ndarray:
+def _decode_jpeg_inner(data: bytes, scan_fn) -> np.ndarray:
     if data[:2] != b"\xff\xd8":
         raise ValueError("missing SOI")
     pos = 2
     n = len(data)
     qtables: dict[int, np.ndarray] = {}
-    htables: dict[tuple[int, int], list[int]] = {}
+    htables: dict[tuple[int, int], tuple[bytes, bytes]] = {}
     comps: list[_Component] = []
     h = w = 0
     hmax = vmax = 1
     mcux = mcuy = 0
     restart_interval = 0
     progressive = False
+    native = False  # baseline scans go to scan_fn (set at SOF)
     decoded: set[int] = set()  # baseline: component ids with a completed scan
     dc_done: set[int] = set()  # progressive: component ids with a DC first scan
 
@@ -1049,7 +1097,8 @@ def _decode_jpeg_inner(data: bytes) -> np.ndarray:
                 vals = bytes(seg[p + 17 : p + 17 + count])
                 if len(vals) != count:
                     raise ValueError("short DHT")
-                htables[(tc, th)] = _decode_lut((bits, vals))
+                _decode_lut((bits, vals))  # built (and checked) at DHT time
+                htables[(tc, th)] = (bits, vals)
                 p += 17 + count
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0 / SOF1 / SOF2
             if comps:
@@ -1079,8 +1128,10 @@ def _decode_jpeg_inner(data: bytes) -> np.ndarray:
             # full interleaved block grid (a superset of what any
             # non-interleaved scan fills; unfilled edge blocks stay 0
             # and are cropped after the IDCT)
+            native = scan_fn is not None and not progressive
             for c in comps:
-                c.coefs = [0] * (mcux * c.hs * mcuy * c.vs * 64)
+                size = mcux * c.hs * mcuy * c.vs * 64
+                c.coefs = np.zeros(size, dtype=np.int32) if native else [0] * size
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError("non-baseline SOF unsupported")
         elif marker == 0xDD:  # DRI
@@ -1129,8 +1180,10 @@ def _decode_jpeg_inner(data: bytes) -> np.ndarray:
                     if _ci in decoded:
                         raise ValueError("component scanned twice")
                     decoded.add(_ci)
+            lut = _native_lut if native else _decode_lut
+            luts = {key: lut(bits_vals) for key, bits_vals in htables.items()}
             with_luts = [
-                (c, ci, htables.get((0, c.td)), htables.get((1, c.ta)))
+                (c, ci, luts.get((0, c.td)), luts.get((1, c.ta)))
                 for c, ci in scan_comps
             ]
             if ns == 1:
@@ -1155,6 +1208,11 @@ def _decode_jpeg_inner(data: bytes) -> np.ndarray:
                 consumed = _decode_progressive_scan(
                     data[scan_start:], with_luts, geom, n_units,
                     restart_interval, ss, se, ah, al,
+                )
+            elif native:
+                consumed = _native_decode_scan(
+                    scan_fn, data, scan_start, with_luts, geom, n_units,
+                    restart_interval,
                 )
             else:
                 consumed = _decode_scan(
@@ -1184,7 +1242,7 @@ def _decode_jpeg_inner(data: bytes) -> np.ndarray:
     ycc = np.empty((h, w, len(comps)), dtype=np.float64)
     for ci, c in enumerate(comps):
         qtbl = qtables[c.tq]
-        zz = np.array(c.coefs, dtype=np.int64).reshape(-1, 64)
+        zz = np.asarray(c.coefs, dtype=np.int64).reshape(-1, 64)
         nat = np.empty_like(zz)
         nat[:, ZIGZAG] = zz  # zigzag -> natural (a full permutation)
         deq = (nat * qtbl).astype(np.float64).reshape(-1, 8, 8)

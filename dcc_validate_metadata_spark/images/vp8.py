@@ -49,6 +49,7 @@ import struct
 
 import numpy as np
 
+from . import native as _native
 from .limits import check_pixel_budget
 from .vp8_tables import COEFF_PROBS, COEFF_UPDATE_PROBS, KF_BMODE_PROBS
 
@@ -315,6 +316,33 @@ def _parse_quant_indices(bd: BoolDecoder):
 
 
 def _parse_header(bd: BoolDecoder, width: int, height: int) -> _Header:
+    h, nparts = _parse_frame_params(bd, width, height)
+    h.base_q, h.q_deltas = _parse_quant_indices(bd)
+    bd.bit()  # refresh_entropy_probs — irrelevant for a still image
+
+    # coefficient probability updates (section 13.4)
+    probs = [
+        [[list(COEFF_PROBS[i][j][k]) for k in range(3)] for j in range(8)]
+        for i in range(4)
+    ]
+    for i in range(4):
+        for j in range(8):
+            for k in range(3):
+                upd = COEFF_UPDATE_PROBS[i][j][k]
+                row = probs[i][j][k]
+                for t in range(11):
+                    if bd.bit(upd[t]):
+                        row[t] = bd.literal(8)
+    h.coeff_probs = probs
+
+    h.skip_enabled = bool(bd.bit())
+    h.skip_prob = bd.literal(8) if h.skip_enabled else 0
+    return h, nparts
+
+
+def _parse_frame_params(bd: BoolDecoder, width: int, height: int):
+    """The frame header up to the token partition count: segmentation
+    and loop-filter parameters -> (header, number of partitions)."""
     h = _Header()
     h.width, h.height = width, height
     h.mb_w = (width + 15) >> 4
@@ -322,9 +350,11 @@ def _parse_header(bd: BoolDecoder, width: int, height: int) -> _Header:
     bd.bit()  # color_space (must be 0 for the defined YUV)
     bd.bit()  # clamping_type (decoder always clamps; bit-identical)
 
+    # segmentation without segment data leaves every segment at an
+    # absolute quantizer and filter level of 0 (libwebp's defaults)
     h.seg_q = [0, 0, 0, 0]
     h.seg_lf = [0, 0, 0, 0]
-    h.seg_abs = False
+    h.seg_abs = True
     h.seg_update_map = False
     h.seg_tree_probs = [255, 255, 255]
     h.seg_enabled = bool(bd.bit())
@@ -354,28 +384,7 @@ def _parse_header(bd: BoolDecoder, width: int, height: int) -> _Header:
             if bd.bit():
                 h.mode_lf_deltas[i] = bd.signed_literal(6)
 
-    n_parts_log2 = bd.literal(2)
-    h.base_q, h.q_deltas = _parse_quant_indices(bd)
-    bd.bit()  # refresh_entropy_probs — irrelevant for a still image
-
-    # coefficient probability updates (section 13.4)
-    probs = [
-        [[list(COEFF_PROBS[i][j][k]) for k in range(3)] for j in range(8)]
-        for i in range(4)
-    ]
-    for i in range(4):
-        for j in range(8):
-            for k in range(3):
-                upd = COEFF_UPDATE_PROBS[i][j][k]
-                row = probs[i][j][k]
-                for t in range(11):
-                    if bd.bit(upd[t]):
-                        row[t] = bd.literal(8)
-    h.coeff_probs = probs
-
-    h.skip_enabled = bool(bd.bit())
-    h.skip_prob = bd.literal(8) if h.skip_enabled else 0
-    return h, 1 << n_parts_log2
+    return h, 1 << bd.literal(2)
 
 
 def _dequant_factors(h: _Header, segment: int):
@@ -385,14 +394,16 @@ def _dequant_factors(h: _Header, segment: int):
         q = h.seg_q[segment] if h.seg_abs else h.base_q + h.seg_q[segment]
     else:
         q = h.base_q
-    q = max(0, min(127, q))
 
+    # the segment index is not clamped before the per-plane delta is
+    # added, only the sum is (as libwebp does); they differ only for a
+    # segment index outside 0..127
     def look(table, delta):
         return table[max(0, min(127, q + delta))]
 
     y1dc_d, y2dc_d, y2ac_d, uvdc_d, uvac_d = h.q_deltas
     y1dc = look(DC_QLOOKUP, y1dc_d)
-    y1ac = AC_QLOOKUP[q]
+    y1ac = look(AC_QLOOKUP, 0)
     y2dc = look(DC_QLOOKUP, y2dc_d) * 2
     y2ac = look(AC_QLOOKUP, y2ac_d) * 155 // 100
     if y2ac < 8:
@@ -410,10 +421,12 @@ def _dequant_factors(h: _Header, segment: int):
 
 def _decode_coeffs(bd, plane_probs, ctx, first, qdc, qac, out):
     """Decode one 4x4 block's tokens into ``out`` (natural order,
-    dequantized). Returns True when any nonzero coefficient was read
-    (the neighbour context flag)."""
+    dequantized). Returns the end-of-block position: the index after the
+    last token read, 16 when the tokens run to the end of the block. The
+    neighbour context flag is ``eob > first`` (as in libwebp and libvpx:
+    a run of zero tokens to the end counts, though no coefficient is
+    nonzero)."""
     i = first
-    nonzero = False
     skip_eob = False
     while i < 16:
         probs = plane_probs[COEFF_BANDS[i]][ctx]
@@ -436,11 +449,13 @@ def _decode_coeffs(bd, plane_probs, ctx, first, qdc, qac, out):
             val = base + extra
         if bd.bit(128):
             val = -val
-        out[ZIGZAG[i]] = val * (qdc if i == 0 else qac)
+        # dequantized coefficients are 16-bit in the reference decoder
+        # and libwebp: out-of-range products of hostile streams wrap
+        dq = val * (qdc if i == 0 else qac)
+        out[ZIGZAG[i]] = ((dq + 32768) & 0xFFFF) - 32768
         ctx = 1 if -1 <= val <= 1 else 2
-        nonzero = True
         i += 1
-    return nonzero
+    return i
 
 
 # ---------------------------------------------------------------------------
@@ -471,7 +486,8 @@ def _iwht4x4(ip):
         out[b + 1] = (c1 + d1 + 3) >> 3
         out[b + 2] = (a1 - b1 + 3) >> 3
         out[b + 3] = (d1 - c1 + 3) >> 3
-    return out
+    # stored as 16-bit luma DC coefficients (see _decode_coeffs)
+    return [((v + 32768) & 0xFFFF) - 32768 for v in out]
 
 
 _C1 = 20091  # cos(pi/8)*sqrt(2) - 1, Q16
@@ -512,6 +528,52 @@ def _idct4x4(ip):
         out[b + 1] = (b1 + c1 + 4) >> 3
         out[b + 2] = (b1 - c1 + 4) >> 3
     return out
+
+
+def _s16(v):
+    return ((v + 32768) & 0xFFFF) - 32768
+
+
+def _butterfly_16bit(x, y):
+    """(c, d) of the odd butterfly with x * 35468 >> 16 formed as
+    (x * -30068 >> 16) + x, in 16-bit lanes."""
+    c = _s16(_s16(x - y) + _s16(((x * -30068) >> 16) - ((y * 20091) >> 16)))
+    d = _s16(_s16(x + y) + _s16(((x * 20091) >> 16) + ((y * -30068) >> 16)))
+    return c, d
+
+
+def _idct4x4_16bit(ip):
+    """``_idct4x4`` computed as libwebp's x86 (SSE2) transform does it:
+    every sum wraps at 16 bits. The two agree while inputs stay within
+    +-2047 (no intermediate leaves int16), which encoders never exceed;
+    only hostile streams reach the wrapping range."""
+    tmp = [0] * 16
+    for c in range(4):
+        i0, i4, i8, i12 = ip[c], ip[4 + c], ip[8 + c], ip[12 + c]
+        a, b = _s16(i0 + i8), _s16(i0 - i8)
+        c1, d1 = _butterfly_16bit(i4, i12)
+        tmp[c], tmp[4 + c] = _s16(a + d1), _s16(b + c1)
+        tmp[8 + c], tmp[12 + c] = _s16(b - c1), _s16(a - d1)
+    out = [0] * 16
+    for r in range(4):
+        t0, t1, t2, t3 = tmp[4 * r : 4 * r + 4]
+        dc = _s16(t0 + 4)
+        a, b = _s16(dc + t2), _s16(dc - t2)
+        c1, d1 = _butterfly_16bit(t1, t3)
+        out[4 * r : 4 * r + 4] = (
+            _s16(a + d1) >> 3, _s16(b + c1) >> 3, _s16(b - c1) >> 3, _s16(a - d1) >> 3
+        )
+    return out
+
+
+def _residual(blk, full: bool):
+    """Inverse transform of one block as libwebp applies it: its full
+    (SIMD) transform serves blocks with more than three tokens (chroma:
+    every block of a plane where any block has more than one), its exact
+    DC-only and three-coefficient shortcuts the rest."""
+    if full and max(map(abs, blk)) > 2047:
+        return _idct4x4_16bit(blk)
+    return _idct4x4(blk)
 
 
 # ---------------------------------------------------------------------------
@@ -698,9 +760,9 @@ def _parse_modes(bd: BoolDecoder, h: _Header) -> list[_MBInfo]:
     return mbs
 
 
-def _decode_frame(data: bytes):
-    """Decode a VP8 key-frame payload -> (hdr, mbs, Y, U, V) with the
-    planes mb-padded and UNCROPPED (loop filter not yet applied)."""
+def _frame_header(data: bytes) -> tuple[int, int, int]:
+    """Check the uncompressed key-frame header (RFC 6386 section 9.1) and
+    the pixel budget -> (width, height, first partition size)."""
     if len(data) < 10:
         raise ValueError("short VP8 payload")
     tag = data[0] | (data[1] << 8) | (data[2] << 16)
@@ -718,10 +780,12 @@ def _decode_frame(data: bytes):
     check_pixel_budget(width, height, "VP8 header")
     if 10 + first_size > len(data):
         raise ValueError("first partition overruns payload")
-    bd = BoolDecoder(data[10 : 10 + first_size])
-    h, nparts = _parse_header(bd, width, height)
+    return width, height, first_size
 
-    # token partition sizes (3-byte little-endian each, last implied)
+
+def _token_partitions(data: bytes, first_size: int, nparts: int) -> list[bytes]:
+    """Split the DCT token partitions (3-byte little-endian sizes, the
+    last one implied)."""
     pos = 10 + first_size
     sizes_end = pos + 3 * (nparts - 1)
     if sizes_end > len(data):
@@ -733,9 +797,30 @@ def _decode_frame(data: bytes):
               | (data[pos + 3 * i + 2] << 16))
         if p + sz > len(data):
             raise ValueError("token partition overruns payload")
-        parts.append(BoolDecoder(data[p : p + sz]))
+        parts.append(data[p : p + sz])
         p += sz
-    parts.append(BoolDecoder(data[p:]))
+    parts.append(data[p:])
+    return parts
+
+
+def _coder_states_valid(data: bytes, width: int, height: int, first_size: int) -> bool:
+    """Whether every partition starts the boolean decoder in a valid
+    state (value below range << 8, i.e. a first byte below 0xFF). No
+    encoder emits anything else; from such a state decoders diverge
+    (libwebp's branch-free sign read, for one), so those frames are
+    decoded by this module only."""
+    first = data[10 : 10 + first_size]
+    _, nparts = _parse_frame_params(BoolDecoder(first), width, height)
+    return all(p[:1] != b"\xff" for p in (first, *_token_partitions(data, first_size, nparts)))
+
+
+def _decode_frame(data: bytes):
+    """Decode a VP8 key-frame payload -> (hdr, mbs, Y, U, V) with the
+    planes mb-padded and UNCROPPED (loop filter not yet applied)."""
+    width, height, first_size = _frame_header(data)
+    bd = BoolDecoder(data[10 : 10 + first_size])
+    h, nparts = _parse_header(bd, width, height)
+    parts = [BoolDecoder(p) for p in _token_partitions(data, first_size, nparts)]
 
     mbs = _parse_modes(bd, h)
 
@@ -765,6 +850,8 @@ def _decode_frame(data: bytes):
             y1dc, y1ac, y2dc, y2ac, uvdc, uvac = quant_cache[mb.segment]
 
             coeffs = [None] * 24  # 16 Y + 4 U + 4 V, natural order or None
+            full = [False] * 16  # libwebp's full transform (see _residual)
+            full_uv = [False, False]  # per chroma plane
             dcs = None
             has = False
             if mb.skip:
@@ -783,12 +870,11 @@ def _decode_frame(data: bytes):
                 probs = h.coeff_probs
                 if mb.ymode != B_PRED:
                     blk = [0] * 16
-                    nz = _decode_coeffs(
+                    eob = _decode_coeffs(
                         td, probs[1], above_y2_nz[c] + left_y2_nz,
                         0, y2dc, y2ac, blk,
                     )
-                    above_y2_nz[c] = left_y2_nz = int(nz)
-                    has |= nz
+                    above_y2_nz[c] = left_y2_nz = int(eob > 0)
                     dcs = _iwht4x4(blk)
                     plane_y, first = 0, 1
                 else:
@@ -796,28 +882,32 @@ def _decode_frame(data: bytes):
                 for sb in range(16):
                     sr, sc = sb >> 2, sb & 3
                     blk = [0] * 16
-                    nz = _decode_coeffs(
+                    eob = _decode_coeffs(
                         td, probs[plane_y],
                         above_y_nz[c * 4 + sc] + left_y_nz[sr],
                         first, y1dc, y1ac, blk,
                     )
-                    above_y_nz[c * 4 + sc] = left_y_nz[sr] = int(nz)
-                    has |= nz
+                    above_y_nz[c * 4 + sc] = left_y_nz[sr] = int(eob > first)
+                    # libwebp's residual flag: tokens past index 1, or a
+                    # nonzero DC (for 16x16 modes, the Y2 transform's)
+                    has |= eob > 1 or (dcs[sb] if dcs is not None else blk[0]) != 0
                     coeffs[sb] = blk
+                    full[sb] = eob > 3
                 for i, (above_nz, left_nz) in enumerate(
                     ((above_u_nz, left_u_nz), (above_v_nz, left_v_nz))
                 ):
                     for sb in range(4):
                         sr, sc = sb >> 1, sb & 1
                         blk = [0] * 16
-                        nz = _decode_coeffs(
+                        eob = _decode_coeffs(
                             td, probs[2],
                             above_nz[c * 2 + sc] + left_nz[sr],
                             0, uvdc, uvac, blk,
                         )
-                        above_nz[c * 2 + sc] = left_nz[sr] = int(nz)
-                        has |= nz
+                        above_nz[c * 2 + sc] = left_nz[sr] = int(eob > 0)
+                        has |= eob > 1 or blk[0] != 0
                         coeffs[16 + 4 * i + sb] = blk
+                        full_uv[i] |= eob > 1
             mb.has_coeffs = has
 
             # ---- reconstruct luma ----
@@ -836,7 +926,7 @@ def _decode_frame(data: bytes):
                     pred = _pred_b(mb.bmodes[sb], A, L, P)
                     blk = coeffs[sb]
                     if blk is not None and any(blk):
-                        res = _idct4x4(blk)
+                        res = _residual(blk, full[sb])
                         for i in range(4):
                             row = pred[i]
                             base = 4 * i
@@ -860,7 +950,7 @@ def _decode_frame(data: bytes):
                     blk[0] = dc
                     if not any(blk):
                         continue
-                    res = _idct4x4(blk)
+                    res = _residual(blk, full[sb])
                     sr, sc = sb >> 2, sb & 3
                     by, bx = sr * 4 + 1, sc * 4 + 1
                     tgt = yb[by : by + 4, bx : bx + 4]
@@ -878,7 +968,7 @@ def _decode_frame(data: bytes):
                     blk = coeffs[16 + 4 * pi + sb]
                     if blk is None or not any(blk):
                         continue
-                    res = _idct4x4(blk)
+                    res = _residual(blk, full_uv[pi])
                     sr, sc = sb >> 1, sb & 1
                     by, bx = sr * 4 + 1, sc * 4 + 1
                     tgt = cb[by : by + 4, bx : bx + 4]
@@ -1004,7 +1094,9 @@ def _loop_filter(h: _Header, mbs, Y, U, V) -> None:
     """In-place deblocking in spec order: per MB raster — left MB edge,
     interior vertical edges, top MB edge, interior horizontal edges —
     luma and (normal filter only) chroma."""
-    if h.filter_level == 0 and not h.seg_enabled and not h.lf_delta_enabled:
+    if h.filter_level == 0:
+        # a zero frame level turns the filter off whatever the segment or
+        # delta levels say (libwebp and libvpx test the frame level)
         return
     simple = h.filter_type == 1
     level_cache = {}
@@ -1163,9 +1255,23 @@ def rgb_to_yuv420(img: np.ndarray):
 
 
 def decode_vp8(data: bytes) -> np.ndarray:
-    """VP8 key-frame payload -> (h, w, 3) uint8 RGB."""
+    """VP8 key-frame payload -> (h, w, 3) uint8 RGB. The YUV planes come
+    from libwebp when ``native.libwebp()`` loads (bit-exact with
+    ``decode_vp8_yuv``), else, or when libwebp refuses the frame, from
+    the pure-Python decoder."""
+    return _decode_vp8(data, _native.libwebp())
+
+
+def _decode_vp8(data: bytes, webp) -> np.ndarray:
+    """``decode_vp8`` with an explicit libwebp handle (None: the
+    pure-Python decoder only)."""
     try:
-        return yuv420_to_rgb(*decode_vp8_yuv(data))
+        yuv = None
+        if webp is not None:
+            width, height, first_size = _frame_header(data)
+            if _coder_states_valid(data, width, height, first_size):
+                yuv = _native.webp_yuv(webp, bytes(data), width, height)
+        return yuv420_to_rgb(*(yuv or decode_vp8_yuv(data)))
     except (ValueError, IndexError, struct.error, OverflowError) as exc:
         raise ValueError(f"bad VP8: {exc}") from exc
 

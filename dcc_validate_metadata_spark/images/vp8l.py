@@ -43,6 +43,7 @@ import struct
 
 import numpy as np
 
+from . import native as _native
 from .limits import check_pixel_budget
 
 # ---------------------------------------------------------------------------
@@ -289,18 +290,17 @@ def _read_prefix_code(r: _LsbReader, alphabet_size: int) -> _PrefixDecoder:
     if r.get(1):  # simple code: 1 or 2 symbols
         num_symbols = r.get(1) + 1
         first_8bits = r.get(1)
-        sym0 = r.get(8 if first_8bits else 1)
-        lengths = [0] * alphabet_size
-        if sym0 >= alphabet_size:
-            raise ValueError("simple-code symbol out of range")
+        syms = [r.get(8 if first_8bits else 1)]
         if num_symbols == 2:
-            sym1 = r.get(8)
-            if sym1 >= alphabet_size or sym1 == sym0:
-                raise ValueError("bad simple-code symbols")
-            lengths[sym0] = 1
-            lengths[sym1] = 1
-        else:
-            lengths[sym0] = 1
+            syms.append(r.get(8))
+        # as in libwebp: a repeated or out-of-alphabet symbol leaves a
+        # one-symbol code; only a code with no symbol left is an error
+        lengths = [0] * alphabet_size
+        for sym in syms:
+            if sym < alphabet_size:
+                lengths[sym] = 1
+        if not any(lengths):
+            raise ValueError("simple-code symbol out of range")
         return _PrefixDecoder(lengths)
     # normal: code-length code first
     num_clc = 4 + r.get(4)
@@ -518,7 +518,11 @@ def _read_spatial(
         else:  # color-cache hit
             if cache is None:
                 raise ValueError("cache symbol without color cache")
-            out[i] = cache[s - 256 - _NUM_LENGTH_CODES]
+            px = cache[s - 256 - _NUM_LENGTH_CODES]
+            out[i] = px
+            # every decoded pixel enters the cache, hits included (as in
+            # libwebp); only matters when the hit slot was never filled
+            cache[_cache_key(px, cache_bits)] = px
             i += 1
     return out
 
@@ -550,7 +554,7 @@ def _predict(
     top = ch[y - 1, x]
     tl = ch[y - 1, x - 1]
     tr = ch[y - 1, x + 1] if x + 1 < w else ch[y, 0]
-    if mode == 0:
+    if mode == 0 or mode > 13:  # 14 and 15 are unassigned; libwebp: black
         return (255, 0, 0, 0)
     if mode == 1:
         return tuple(left)
@@ -596,7 +600,6 @@ def _predict(
             half = (d >> 1) if d >= 0 else -((-d) >> 1)
             out.append(min(255, max(0, a + half)))
         return tuple(out)
-    raise ValueError(f"bad predictor mode {mode}")
 
 
 def _inverse_predictor(
@@ -655,16 +658,26 @@ def _inverse_color_transform(
 
 
 def decode_webp(data: bytes) -> np.ndarray:
-    """Decode a lossless WebP (RIFF/VP8L) byte stream to (h, w, 3) uint8
-    RGB. Lossy ``VP8 `` payloads raise ``ValueError`` (no VP8 intra
-    decoder in this sandbox); the alpha channel is dropped."""
+    """Decode a WebP (RIFF container with a lossless ``VP8L`` or a lossy
+    ``VP8 `` chunk) to (h, w, 3) uint8 RGB; the alpha channel is dropped.
+    Lossy frames go to ``vp8.decode_vp8``. The RIFF walk and the VP8L
+    header checks run here in Python; the bitstream itself is decoded by
+    libwebp when ``native.libwebp()`` loads, and by this module's decoder
+    otherwise or when libwebp refuses it. Raises ``ValueError`` on
+    malformed input."""
+    return _decode_webp(data, _native.libwebp())
+
+
+def _decode_webp(data: bytes, webp) -> np.ndarray:
+    """``decode_webp`` with an explicit libwebp handle (None: the
+    pure-Python decoders only)."""
     try:
-        return _decode_webp_inner(data)
+        return _decode_webp_inner(data, webp)
     except (ValueError, IndexError, struct.error, OverflowError) as exc:
         raise ValueError(f"bad WebP: {exc}") from exc
 
 
-def _decode_webp_inner(data: bytes) -> np.ndarray:
+def _decode_webp_inner(data: bytes, webp) -> np.ndarray:
     if len(data) < 20 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise ValueError("not a RIFF/WEBP container")
     (riff_size,) = struct.unpack("<I", data[4:8])
@@ -683,10 +696,10 @@ def _decode_webp_inner(data: bytes) -> np.ndarray:
             break
         if tag == b"VP8 ":
             # lossy WebP: a single VP8 key frame (RFC 6386), decoded by
-            # the from-scratch images/vp8.py codec; alpha (ALPH) dropped
-            from .vp8 import decode_vp8
+            # images/vp8.py; alpha (ALPH) dropped
+            from .vp8 import _decode_vp8
 
-            return decode_vp8(body)
+            return _decode_vp8(body, webp)
         pos += 8 + sz + (sz & 1)  # chunks are 2-byte aligned
     if payload is None:
         raise ValueError("no VP8L chunk")
@@ -702,6 +715,10 @@ def _decode_webp_inner(data: bytes) -> np.ndarray:
     r.get(1)  # alpha-used hint
     if r.get(3) != 0:
         raise ValueError("unknown VP8L version")
+    if webp is not None:
+        rgb = _native.webp_rgb(webp, bytes(payload), width, height)
+        if rgb is not None:
+            return rgb
 
     # transforms, tracking the coded width (color-indexing shrinks it)
     transforms: list[tuple] = []
@@ -717,7 +734,8 @@ def _decode_webp_inner(data: bytes) -> np.ndarray:
             sub = _read_spatial(
                 r, _subsample(cur_w, bits), _subsample(height, bits), False
             )
-            transforms.append(("pred", bits, [(p >> 8) & 0xFF for p in sub], cur_w))
+            # the mode is the green byte's low nibble (libwebp)
+            transforms.append(("pred", bits, [(p >> 8) & 0xF for p in sub], cur_w))
         elif ttype == 1:  # color
             bits = r.get(3) + 2
             sub = _read_spatial(
@@ -739,6 +757,8 @@ def _decode_webp_inner(data: bytes) -> np.ndarray:
                 b = ((prev & 0xFF) + (p & 0xFF)) & 0xFF
                 prev = (a << 24) | (rd << 16) | (g << 8) | b
                 pal.append(prev)
+            # RFC 9649: an index past the table is transparent black
+            pal += [0] * (256 - pal_size)
             if pal_size <= 2:
                 wb = 3
             elif pal_size <= 4:
@@ -757,10 +777,7 @@ def _decode_webp_inner(data: bytes) -> np.ndarray:
         if t[0] == "palette":
             _, pal, wb, full_w = t
             if wb == 0:
-                idx = [(p >> 8) & 0xFF for p in pixels]
-                if max(idx, default=0) >= len(pal):
-                    raise ValueError("palette index out of range")
-                pixels = [pal[i2] for i2 in idx]
+                pixels = [pal[(p >> 8) & 0xFF] for p in pixels]
             else:
                 per = 1 << wb  # indices packed per green byte
                 ibits = 8 >> wb
@@ -771,10 +788,7 @@ def _decode_webp_inner(data: bytes) -> np.ndarray:
                     row = y * packed_w
                     for x in range(full_w):
                         g = (pixels[row + (x >> wb)] >> 8) & 0xFF
-                        i2 = (g >> (ibits * (x % per))) & mask
-                        if i2 >= len(pal):
-                            raise ValueError("palette index out of range")
-                        new[y * full_w + x] = pal[i2]
+                        new[y * full_w + x] = pal[(g >> (ibits * (x % per))) & mask]
                 pixels = new
             cur_w = full_w
         elif t[0] == "sub_green":

@@ -167,8 +167,7 @@ def main() -> None:
     results = {}
     for cores in all_levels:
         if args.interleave and cores in headline:
-            rows_n = 600_000 if args.rows is None else args.rows
-            r = {"runs_sec": runs_acc[cores], "rows": rows_n}
+            r = {"runs_sec": runs_acc[cores], "rows": args.rows}
             if task_acc[cores]:
                 ts = [t[0] for t in task_acc[cores]]
                 r["task_sec"] = ts

@@ -101,3 +101,20 @@ def test_fused_decode_equals_split_pair(spark, fixture_dir):
     e = _norm(split, VIOL_COLS)
     assert len(g) > 0
     pd.testing.assert_frame_equal(g, e)
+
+
+def test_decode_check_rebalance_without_image_id_kept(spark, fixture_dir):
+    """``rebalance`` hash-partitions the decode branch on ``image_id``,
+    which must be projected even when ``keep_cols`` leaves it out; the
+    violations are the unbalanced ones."""
+    from dcc_validate_metadata_spark.images.invariants import decode_check_violations
+
+    df = load_image_table(spark, fixture_dir / "image_caption")
+    keep = ["fmt", "bucket"]
+    cols = keep + ["field", "severity", "message"]
+    plain = decode_check_violations(df, keep).toPandas()
+    balanced = decode_check_violations(df, keep, rebalance=4)
+    assert balanced.rdd.getNumPartitions() == 4
+    got = balanced.toPandas()
+    assert list(got.columns) == cols and len(plain) > 0
+    pd.testing.assert_frame_equal(_norm(got, cols), _norm(plain, cols))

@@ -18,67 +18,29 @@ self-contained coverage in test_vp8_codec.py.
 from __future__ import annotations
 
 import ctypes
-import ctypes.util
 import struct
 
 import numpy as np
 import pytest
 
-from dcc_validate_metadata_spark.images import vp8
+from dcc_validate_metadata_spark.images import native, vp8
 
-
-def _load_libwebp():
-    for name in ("libwebp.so.7", "libwebp.so", ctypes.util.find_library("webp")):
-        if not name:
-            continue
-        try:
-            return ctypes.CDLL(name)
-        except OSError:
-            continue
-    return None
-
-
-_LIB = _load_libwebp()
+_LIB = native.libwebp()  # the decoders' own loader (decode entry points typed)
 pytestmark = pytest.mark.skipif(_LIB is None, reason="libwebp not available")
 
 if _LIB is not None:
-    _LIB.WebPDecodeYUV.restype = ctypes.POINTER(ctypes.c_uint8)
-    _LIB.WebPDecodeYUV.argtypes = [
-        ctypes.c_char_p, ctypes.c_size_t,
-        ctypes.POINTER(ctypes.c_int), ctypes.POINTER(ctypes.c_int),
-        ctypes.POINTER(ctypes.POINTER(ctypes.c_uint8)),
-        ctypes.POINTER(ctypes.POINTER(ctypes.c_uint8)),
-        ctypes.POINTER(ctypes.c_int), ctypes.POINTER(ctypes.c_int),
-    ]
     _LIB.WebPEncodeRGB.restype = ctypes.c_size_t
     _LIB.WebPEncodeRGB.argtypes = [
         ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
         ctypes.c_float, ctypes.POINTER(ctypes.POINTER(ctypes.c_uint8)),
     ]
-    _LIB.WebPFree.restype = None
-    _LIB.WebPFree.argtypes = [ctypes.c_void_p]
 
 
 def _lib_yuv(webp: bytes):
-    w = ctypes.c_int()
-    h = ctypes.c_int()
-    stride = ctypes.c_int()
-    uvs = ctypes.c_int()
-    up = ctypes.POINTER(ctypes.c_uint8)()
-    vp = ctypes.POINTER(ctypes.c_uint8)()
-    yp = _LIB.WebPDecodeYUV(
-        webp, len(webp), ctypes.byref(w), ctypes.byref(h),
-        ctypes.byref(up), ctypes.byref(vp),
-        ctypes.byref(stride), ctypes.byref(uvs),
-    )
-    assert yp, "libwebp refused the stream"
-    W, H = w.value, h.value
-    y = np.ctypeslib.as_array(yp, shape=(H, stride.value))[:, :W].copy()
-    cw, ch = (W + 1) // 2, (H + 1) // 2
-    u = np.ctypeslib.as_array(up, shape=(ch, uvs.value))[:, :cw].copy()
-    v = np.ctypeslib.as_array(vp, shape=(ch, uvs.value))[:, :cw].copy()
-    _LIB.WebPFree(ctypes.cast(yp, ctypes.c_void_p))
-    return y, u, v
+    w, h, _ = vp8._frame_header(_vp8_chunk(webp))
+    yuv = native.webp_yuv(_LIB, webp, w, h)
+    assert yuv is not None, "libwebp refused the stream"
+    return yuv
 
 
 def _lib_encode(img: np.ndarray, quality: float) -> bytes:
