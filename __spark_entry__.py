@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full validation of the deterministic image+caption
-    fixture — row rules, salted uniqueness, broadcast referential checks,
+    fixture — row rules, uniqueness, broadcast referential checks,
     Arrow-batched decode + PSNR/caption invariants — returning the
     violation rows (driver checks rows > 0 and a stable schema)."""
     from dcc_validate_metadata_spark.queries.validationpack import img_validate

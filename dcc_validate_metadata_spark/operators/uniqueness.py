@@ -1,12 +1,12 @@
-"""Salted two-phase uniqueness check.
+"""Uniqueness check: one per-key count.
 
 Reference analogue: distinct-set accumulation in a driver-side ``set()``
-(``validation/RelationshipsIssues.py:13-24`` — SURVEY.md A6). At 10^12 rows
-a single ``groupBy(key)`` on a skewed key melts one reducer, so the count
-is two-phase: partial count per (key, salt) — salt derived from the
-physical partition, so hot keys split across reducers — then a final
-re-aggregation over the (tiny) partial-count table. Duplicate keys are then
-joined back onto the fact table to emit per-row violation rows.
+(``validation/RelationshipsIssues.py:13-24`` — SURVEY.md A6). A plain
+``groupBy(key).count()`` is skew-safe without salting: Spark's hash
+aggregate runs a map-side ``partial_count``, so a hot key sends one row
+per map task into the single exchange, however many rows it has.
+Duplicate keys are then joined back onto the fact table to emit per-row
+violation rows.
 
 The join-back strategy is gated on a COUNTED size, not a blind hint:
 "duplicates are rare" holds for clean submissions, but a dedup-heavy
@@ -66,17 +66,13 @@ def gated_dup_table(
     return dups
 
 
-def duplicate_keys(df: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
+def duplicate_keys(df: DataFrame, key: str) -> DataFrame:
     """(key, n) for every key value occurring more than once. Nulls are
     ignored (presence is the mandatory rule's job)."""
-    partial = (
-        df.filter(F.col(key).isNotNull())
-        .groupBy(key, F.pmod(F.spark_partition_id(), F.lit(n_salts)).alias("_salt"))
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-    )
     return (
-        partial.groupBy(key)
-        .agg(F.sum("_cnt").alias("n"))
+        df.filter(F.col(key).isNotNull())
+        .groupBy(key)
+        .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > 1)
     )
 
@@ -85,7 +81,6 @@ def uniqueness_violations(
     df: DataFrame,
     fields: list[str],
     keep_cols: list[str],
-    n_salts: int = 16,
     max_broadcast_rows: int = DUP_BROADCAST_MAX_ROWS,
 ) -> DataFrame:
     """Long-form violation rows for all duplicated values of each field:
@@ -94,9 +89,7 @@ def uniqueness_violations(
     keep = list(keep_cols)
     outs = []
     for fld in fields:
-        dups = gated_dup_table(
-            duplicate_keys(df, fld, n_salts=n_salts), max_broadcast_rows
-        )
+        dups = gated_dup_table(duplicate_keys(df, fld), max_broadcast_rows)
         v = (
             df.join(dups, on=fld, how="inner")
             .select(

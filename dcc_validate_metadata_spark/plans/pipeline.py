@@ -10,7 +10,7 @@ re-running a partition is idempotent; the manifest (plans/manifest.py)
 records completion for resume.
 
 Flow:
-    load → [row rules | salted uniqueness | broadcast referential |
+    load → [row rules | uniqueness | broadcast referential |
             Arrow decode checks | (optional) ground-truth invariants]
          → union → violations(fmt,bucket,image_id,field,severity,message)
          → verdicts(fmt,bucket,pass,n_errors,n_warnings)
@@ -65,20 +65,20 @@ def build_violations(
 
     Set-level (uniqueness) and join-level (referential) checks fold into
     the same ``select`` as the row rules: the ontology key set is tiny by
-    construction and broadcasts; the duplicate-key tables from the salted
-    two-phase agg are size-gated (operators/uniqueness.gated_dup_table —
+    construction and broadcasts; the duplicate-key tables from the
+    per-key count are size-gated (operators/uniqueness.gated_dup_table —
     broadcast only when a counted probe proves them small; dedup-heavy
     corpora keep the shuffle join and can never OOM a broadcast). The
     probe makes this function run one tiny Spark action per unique rule;
     everything else stays lazy. Every non-UDF violation struct
-    is emitted from a single exploded array (the reference's three Celery
-    chord branches — SURVEY.md §3.1 — collapse into one stage). The table
+    is emitted from a single exploded array (rules/compiler.
+    explode_violations; the reference's three Celery chord branches —
+    SURVEY.md §3.1 — collapse into one generated stage). The table
     is scanned with ``bytes`` pruned away; only the decode branch reads it.
     """
-    from pyspark.sql import functions as F  # local alias for fused exprs
     from ..operators.uniqueness import duplicate_keys, gated_dup_table
     from ..rules import messages as M
-    from ..rules.compiler import VIOLATION_SCHEMA, compile_rule
+    from ..rules.compiler import compile_rule, explode_violations
 
     ruleset = ruleset or default_image_ruleset()
 
@@ -104,7 +104,7 @@ def build_violations(
             exprs.append(col)
 
     main = df
-    # uniqueness: per-field dup tables (salted two-phase agg), broadcast back
+    # uniqueness: per-field dup tables (one per-key count), broadcast back
     for i, rule in enumerate(ruleset.unique_rules):
         fld = rule.field
         # size-gated broadcast: tiny for clean inputs (broadcast, fact
@@ -158,16 +158,7 @@ def build_violations(
                 )
             )
 
-    arr = (
-        F.filter(F.array(*exprs), lambda x: x.isNotNull())
-        if exprs
-        else F.array().cast(f"array<{VIOLATION_SCHEMA.simpleString()}>")
-    )
-    fused = main.select(*KEEP, F.explode(arr).alias("v")).select(
-        *KEEP, "v.field", "v.severity", "v.message"
-    )
-
-    parts = [fused]
+    parts = [explode_violations(main, exprs, KEEP)]
     if ruleset.udf_rules:
         if gt is not None:
             # ONE decode per row for structural + invariant checks: entropy
@@ -341,7 +332,13 @@ def run_validation(
         }
         (out / "drift.json").write_text(_json.dumps(report, indent=2))
 
-    n_rows = df.count()
+    # one aggregate gives both the total and the manifest's per-partition
+    # row counts
+    row_counts = {
+        (r["fmt"], r["bucket"]): r["count"]
+        for r in df.groupBy(*PART_KEYS).count().collect()
+    }
+    n_rows = sum(row_counts.values())
     if n_rows == 0:
         return ValidationResult(
             violations=spark.createDataFrame([], "fmt string, bucket int, image_id string, field string, severity string, message string"),
@@ -380,9 +377,11 @@ def run_validation(
         F.col("bucket").cast("int").alias("bucket"),
         "image_id", "field", "severity", "message",
     )
-    verdicts = build_verdicts(df, violations_on_disk)
+    # cached so the collect and the write share one readback + join
+    verdicts = build_verdicts(df, violations_on_disk).persist()
     verdicts_rows = verdicts.collect()  # tiny: one row per partition
     verdicts.write.mode("overwrite").parquet(str(out / "verdicts"))
+    verdicts.unpersist()
 
     # violations + verdicts are on disk: drop the cached dup tables so a
     # long-lived session (bench loops, repeated resumes) doesn't
@@ -391,10 +390,6 @@ def run_validation(
 
     release_dup_tables()
 
-    row_counts = {
-        (r["fmt"], r["bucket"]): r["n"]
-        for r in df.groupBy(*PART_KEYS).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
     finished = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
     manifest.commit(
         [

@@ -942,7 +942,7 @@ def _load(spark):
 
 
 def img_validate(spark, sf_dir):
-    """The flagship: full validation pass (row rules ∥ salted uniqueness ∥
+    """The flagship: full validation pass (row rules ∥ uniqueness ∥
     broadcast referential ∥ Arrow decode ∥ ground-truth invariants) fused
     over one scan; oracle = the generator's independently-derived golden
     violation rows."""
@@ -1011,7 +1011,7 @@ FROM (
 
 
 def img_dup_phash(spark, sf_dir):
-    """Salted two-phase duplicate detection on phash."""
+    """Duplicate detection on phash: one per-key count."""
     from ..operators.uniqueness import duplicate_keys
 
     return duplicate_keys(_load(spark), "phash").orderBy("phash")

@@ -10,6 +10,10 @@ and the violation output is the exploded long-form DataFrame
     (row key cols…, field, severity, message)
 
 mirroring the reference's ``errors``/``warnings`` overlay (SURVEY.md §1.1).
+The rule array must never pass through a lambda (e.g. ``filter(arr,
+x -> x IS NOT NULL)``): a higher-order function is a ``CodegenFallback``,
+so Spark would interpret the whole rule tree under it row by row; the
+NULLs are filtered after the ``explode`` instead (:func:`explode_violations`).
 Message strings come exclusively from rules/messages.py and are built
 JVM-side with ``concat``/``format_string`` so they match the Python
 formatting byte-for-byte.
@@ -231,8 +235,8 @@ def compile_rule(rule: Rule, df: DataFrame, table: str) -> Column | None:
     raise ValueError(f"not a row-level rule kind: {rule.kind}")
 
 
-def compile_ruleset(ruleset: Ruleset, df: DataFrame) -> Column:
-    """All row-level rules fused into one array<violation> Column.
+def compile_ruleset(ruleset: Ruleset, df: DataFrame) -> list[Column]:
+    """Every row-level rule as a violation-struct-or-NULL Column.
 
     Rules naming a column the frame doesn't have are skipped: a sheet
     may omit optional ``__units``/``__term`` sibling columns entirely,
@@ -248,9 +252,23 @@ def compile_ruleset(ruleset: Ruleset, df: DataFrame) -> Column:
         col = compile_rule(rule, df, ruleset.table)
         if col is not None:
             exprs.append(col)
-    if not exprs:
-        return F.array().cast(T.ArrayType(VIOLATION_SCHEMA))
-    return F.filter(F.array(*exprs), lambda x: x.isNotNull())
+    return exprs
+
+
+def explode_violations(
+    df: DataFrame, exprs: list[Column], keep_cols: list[str]
+) -> DataFrame:
+    """Fuse violation-or-NULL Columns into long-form rows (keep_cols…,
+    field, severity, message): one ``explode`` of the rule array, then
+    the NULLs (rules that did not fire) filtered out — all in the same
+    generated stage as the rule expressions."""
+    keep = list(keep_cols)
+    arr = F.array(*exprs) if exprs else F.array().cast(T.ArrayType(VIOLATION_SCHEMA))
+    return (
+        df.select(*keep, F.explode(arr).alias("v"))
+        .where(F.col("v").isNotNull())
+        .select(*keep, "v.field", "v.severity", "v.message")
+    )
 
 
 def violations_for(
@@ -261,10 +279,4 @@ def violations_for(
     """Long-form row-level violations: (keep_cols…, field, severity,
     message). Single scan, no shuffle — the explode is a generator inside
     the same stage."""
-    keep = list(keep_cols)
-    arr = compile_ruleset(ruleset, df)
-    out = (
-        df.select(*keep, F.explode(arr).alias("v"))
-        .select(*keep, "v.field", "v.severity", "v.message")
-    )
-    return out
+    return explode_violations(df, compile_ruleset(ruleset, df), keep_cols)

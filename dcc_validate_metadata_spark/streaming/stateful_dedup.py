@@ -1,6 +1,6 @@
 """Custom stateful streaming operator: cross-batch duplicate detection.
 
-The batch pipeline's uniqueness check (salted two-phase aggregate) sees
+The batch pipeline's uniqueness check (one per-key count) sees
 the whole table at once; a streaming ingest must remember which keys it
 has already admitted ACROSS micro-batches. That is Structured
 Streaming's arbitrary-stateful-operator territory —

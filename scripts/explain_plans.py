@@ -10,7 +10,10 @@ Checked per query (where applicable):
 * **Broadcast joins** — KB-scale lookup sides broadcast (no shuffle of the
   fact side); large joins may sort-merge.
 * **WholeStageCodegen** — row-rule expressions stay inside codegen spans
-  (no Python in the hot path outside mapInPandas stages).
+  (no Python in the hot path outside mapInPandas stages). The exploded
+  violation-struct array (the fused rule pass) must contain no
+  ``lambdafunction``: a higher-order function is a ``CodegenFallback``,
+  so every rule under it would be interpreted row by row.
 
 Usage: python scripts/explain_plans.py [sf_dir]
 """
@@ -46,6 +49,14 @@ def formatted_plan(df) -> str:
     return formatted + "\nCODEGEN_STARS: " + stars
 
 
+def rule_pass_lambdas(plan: str) -> int:
+    """Generate nodes exploding violation structs (field, severity,
+    message) whose generator contains a lambda. The dedup/text operators'
+    own ``transform``/``filter`` explodes are not violation structs."""
+    gens = re.findall(r"^\(\d+\) Generate\n(.*?)(?:\n\n|\Z)", plan, flags=re.M | re.S)
+    return sum("struct(field, " in g and "lambdafunction" in g for g in gens)
+
+
 def audit(name: str, plan: str) -> dict:
     return {
         "query": name,
@@ -66,7 +77,11 @@ def audit(name: str, plan: str) -> dict:
         "python_stages": len(
             re.findall(r"MapInPandas|ArrowEvalPython|BatchEvalPython", plan)
         ),
+        "rule_pass_lambdas": rule_pass_lambdas(plan),
     }
+
+
+LAMBDA_PROBLEM = "rule array passes through a lambda (codegen fallback) before the explode"
 
 
 def audit_all(spark, sf_dir: str):
@@ -99,6 +114,8 @@ def audit_all(spark, sf_dir: str):
         # BroadcastNestedLoopJoin, not CartesianProduct
         if a["cartesian_products"]:
             problems.append(f"{name}: CartesianProduct in plan")
+        if a["rule_pass_lambdas"]:
+            problems.append(f"{name}: {LAMBDA_PROBLEM}")
 
     # the fused pipeline: check bytes pruning holds for the non-UDF side
     from dcc_validate_metadata_spark.plans.pipeline import build_violations
@@ -123,6 +140,8 @@ def audit_all(spark, sf_dir: str):
         problems.append(
             f"pipeline: expected exactly 1 bytes-reading scan, got {n_bytes_scans}"
         )
+    if rule_pass_lambdas(plan):
+        problems.append(f"pipeline: {LAMBDA_PROBLEM}")
     return rows, problems, pipeline_note
 
 
@@ -146,8 +165,9 @@ def main() -> None:
         "Generated by `python scripts/explain_plans.py`. Checks that every",
         "driver-pack query plan pushes filters to the scan, prunes columns",
         "(no query outside the image pack reads `bytes`), broadcasts small",
-        "join sides, and keeps expressions inside WholeStageCodegen;",
-        "Python appears only in the Arrow decode/ANN stages.",
+        "join sides, and keeps expressions inside WholeStageCodegen (no",
+        "lambda over the exploded rule array); Python appears only in the",
+        "Arrow decode/ANN stages.",
         "",
         f"**{pipeline_note}**",
         "",

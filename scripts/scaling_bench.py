@@ -246,8 +246,8 @@ def main() -> None:
         "",
         "## What is measured",
         "",
-        "The full validation job — compiled row rules + salted two-phase",
-        "uniqueness + broadcast referential join + Arrow-batched image decode",
+        "The full validation job — compiled row rules + per-key",
+        "uniqueness counts + broadcast referential join + Arrow-batched image decode",
         f"checks — over one pre-generated image+caption table ({args.rows:,}",
         f"rows, {args.hw}x{args.hw} RGB, fmt skewed ~80% jpeg, ~76 scan",
         "tasks). Each parallelism level is its own",
@@ -317,7 +317,7 @@ def main() -> None:
             "",
             "The job is embarrassingly parallel per input split: decode + row",
             "rules carry no cross-row state; the only shuffles are the two",
-            "salted two-phase uniqueness aggregations whose reduce side is",
+            "uniqueness counts (map-side partial counts) whose reduce side is",
             "O(distinct duplicate keys), and the referential check broadcasts a",
             "KB-scale ontology table. No stage's input grows with parallelism,",
             "so on a real cluster throughput scales with executor count until",

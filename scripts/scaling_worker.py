@@ -3,7 +3,7 @@
 Launched via ``spark-submit --master local[N] --py-files engine.zip``
 (the north-rule launch mode, BASELINE.json) — so the master and core
 count come from spark-submit, NOT from the engine's session factory.
-Runs the full validation pass (row rules + salted uniqueness +
+Runs the full validation pass (row rules + uniqueness +
 broadcast referential + Arrow decode checks) over a pre-generated
 image+caption table, warm-up first, then timed runs, and prints ONE
 JSON line with the timings.

@@ -1,4 +1,4 @@
-"""Operator unit tests: uniqueness (salt invariance), column stats vs
+"""Operator unit tests: uniqueness vs pandas, column stats vs
 pandas, drift detection (planted drifted partition), and partial manifest
 resume (SURVEY.md §5 test strategy)."""
 
@@ -20,7 +20,7 @@ from dcc_validate_metadata_spark.operators.uniqueness import duplicate_keys
 
 
 # ---------------------------------------------------------------- uniqueness
-def test_duplicate_keys_matches_pandas_and_salt_invariant(spark, fixture_dir):
+def test_duplicate_keys_matches_pandas(spark, fixture_dir):
     from dcc_validate_metadata_spark.sources.image_table import load_image_table
 
     df = load_image_table(spark, fixture_dir / "image_caption")
@@ -28,17 +28,16 @@ def test_duplicate_keys_matches_pandas_and_salt_invariant(spark, fixture_dir):
     expected = (
         pdf.groupby("image_id").size().reset_index(name="n").query("n > 1")
     )
-    for n_salts in (1, 4, 64):
-        got = (
-            duplicate_keys(df, "image_id", n_salts=n_salts)
-            .toPandas()
-            .sort_values("image_id")
-            .reset_index(drop=True)
-        )
-        assert got["image_id"].tolist() == sorted(expected["image_id"])
-        assert got.set_index("image_id")["n"].to_dict() == (
-            expected.set_index("image_id")["n"].to_dict()
-        )
+    got = (
+        duplicate_keys(df, "image_id")
+        .toPandas()
+        .sort_values("image_id")
+        .reset_index(drop=True)
+    )
+    assert got["image_id"].tolist() == sorted(expected["image_id"])
+    assert got.set_index("image_id")["n"].to_dict() == (
+        expected.set_index("image_id")["n"].to_dict()
+    )
 
 
 # --------------------------------------------------------------------- stats

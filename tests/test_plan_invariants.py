@@ -2,7 +2,8 @@
 `scripts/explain_plans.py` audits — bytes read by at most the decode
 scans, Python stages only in whitelisted Arrow queries, no
 CartesianProduct anywhere, exactly one bytes-reading scan in the fused
-pipeline — used to live only in PLANS.md, so a regression (e.g. a second
+pipeline, no lambda (codegen fallback) over the exploded rule array —
+used to live only in PLANS.md, so a regression (e.g. a second
 `bytes` scan sneaking back into build_violations) surfaced at judging
 time instead of failing CI. This test runs the same audit over every
 driver-pack query at sf0.001 and fails on any problem line."""

@@ -118,3 +118,35 @@ def test_decode_check_rebalance_without_image_id_kept(spark, fixture_dir):
     got = balanced.toPandas()
     assert list(got.columns) == cols and len(plain) > 0
     pd.testing.assert_frame_equal(_norm(got, cols), _norm(plain, cols))
+
+
+
+# Spark jobs of one run_validation on the fixture with ontology + ground
+# truth. Each scan, aggregate and write the run needs happens once; a job
+# that re-runs finished work (a second count scan, verdicts computed twice,
+# a two-pass uniqueness count) pushes the count past this bound.
+MAX_VALIDATION_JOBS = 25
+
+
+def test_run_validation_job_count(spark, fixture_dir, tmp_path):
+    sc = spark.sparkContext._jsc.sc()
+
+    def jobs():  # the status store's job list, newest job first
+        sc.listenerBus().waitUntilEmpty()
+        return sc.statusStore().jobsList(None)
+
+    # reading a parquet file's schema can run a job: read before the mark
+    ontology = spark.read.parquet(str(fixture_dir / "ontology_terms.parquet"))
+    gt = spark.read.parquet(str(fixture_dir / "image_caption_gt.parquet"))
+    before = jobs()
+    mark = before.apply(0).jobId() if before.size() else -1
+    r = run_validation(
+        spark, str(fixture_dir / "image_caption"), str(tmp_path / "out"),
+        ontology=ontology, gt=gt,
+    )
+    assert r.n_rows == 1000
+    after = jobs()
+    n_jobs = 0
+    while n_jobs < after.size() and after.apply(n_jobs).jobId() > mark:
+        n_jobs += 1
+    assert n_jobs <= MAX_VALIDATION_JOBS, f"run_validation ran {n_jobs} Spark jobs"
