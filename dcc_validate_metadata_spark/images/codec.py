@@ -52,6 +52,7 @@ from . import jpeg as _jpeg
 from . import native as _native
 from . import vp8 as _vp8
 from . import vp8l as _vp8l
+from .limits import check_pixel_budget
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _JPEG_SIG = b"\xff\xd8\xff"
@@ -83,6 +84,20 @@ def encode_png(pixels: np.ndarray) -> bytes:
     ).tobytes()
     idat = zlib.compress(raw, 6)
     return _PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
+
+
+def _inflate(data: bytes, expected: int) -> bytes:
+    """zlib-inflate at most ``expected + 1`` bytes: enough to tell a size
+    mismatch, but a small stream can no longer inflate without bound (a
+    deflate bomb). A stream that ends early fails with ``zlib.decompress``'s
+    own message, which ``decompressobj`` does not raise by itself."""
+    d = zlib.decompressobj()
+    out = d.decompress(data, expected + 1)
+    if not d.eof and len(out) <= expected:
+        raise ValueError(
+            "Error -5 while decompressing data: incomplete or truncated stream"
+        )
+    return out
 
 
 def _unfilter(raw: np.ndarray, h: int, w: int, bpp: int = 3) -> np.ndarray:
@@ -150,8 +165,9 @@ def decode_png(data: bytes) -> np.ndarray:
         raise ValueError("PNG missing IHDR/IDAT")
     if bitdepth != 8 or colortype != 2:
         raise ValueError(f"unsupported PNG (bitdepth={bitdepth}, colortype={colortype})")
-    raw = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
+    check_pixel_budget(w, h, "PNG IHDR")
     expected = h * (1 + w * 3)
+    raw = np.frombuffer(_inflate(bytes(idat), expected), dtype=np.uint8)
     if raw.size != expected:
         raise ValueError("PNG scanline size mismatch")
     return _unfilter(raw.reshape(h, 1 + w * 3), h, w)
@@ -180,7 +196,8 @@ def decode_lossy(data: bytes) -> tuple[np.ndarray, str]:
         raise ValueError("not a FAKL lossy container")
     fmt = data[4:8].rstrip(b"\x00").decode("ascii")
     w, h = struct.unpack(">HH", data[8:12])
-    raw = np.frombuffer(zlib.decompress(data[12:]), dtype=np.uint8)
+    check_pixel_budget(w, h, "FAKL header")
+    raw = np.frombuffer(_inflate(data[12:], h * w * 3), dtype=np.uint8)
     if raw.size != h * w * 3:
         raise ValueError("lossy payload size mismatch")
     return raw.reshape(h, w, 3), fmt
@@ -218,16 +235,21 @@ def _decode_image_python(data: bytes) -> tuple[np.ndarray, str]:
 
 
 def _decode_image(data: bytes, native: bool) -> tuple[np.ndarray, str]:
-    if data[:8] == _PNG_SIG:
-        return decode_png(data), "png"
-    if data[:3] == _JPEG_SIG:
-        scan_fn = _native.jpeg_scan() if native else None
-        return _jpeg._decode_jpeg(data, scan_fn), "jpeg"
-    if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-        webp = _native.libwebp() if native else None
-        return _vp8l._decode_webp(data, webp), "webp"
-    if data[:4] == _FAKE_MAGIC:
-        return decode_lossy(data)
+    # every decode failure is a ValueError (the violation-row path);
+    # short-header unpacks and bad deflate data keep their own text
+    try:
+        if data[:8] == _PNG_SIG:
+            return decode_png(data), "png"
+        if data[:3] == _JPEG_SIG:
+            scan_fn = _native.jpeg_scan() if native else None
+            return _jpeg._decode_jpeg(data, scan_fn), "jpeg"
+        if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
+            webp = _native.libwebp() if native else None
+            return _vp8l._decode_webp(data, webp), "webp"
+        if data[:4] == _FAKE_MAGIC:
+            return decode_lossy(data)
+    except (struct.error, zlib.error) as e:
+        raise ValueError(str(e)) from e
     raise ValueError("unrecognized image container")
 
 

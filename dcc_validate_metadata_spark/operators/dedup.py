@@ -1,5 +1,6 @@
-"""Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash,
-embedding-cosine near-dup.
+"""Deduplication operators: n-gram Jaccard, MinHash+LSH, SimHash,
+embedding-cosine near-dup (exact-key groups are one ``groupBy``, inlined
+in ``queries/trainingdata.dd_exact_groups``).
 
 Training-data-pipeline operators absent from the reference (its only dedup
 is ``if dictionary not in list`` while merging chunks —
@@ -66,18 +67,6 @@ def word_shingles(
 # --------------------------------------------------------------------------
 # exact + n-gram Jaccard
 # --------------------------------------------------------------------------
-
-def exact_dup_groups(df: DataFrame, key: Column, id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup via hash-groupBy on a canonical key (e.g. the text
-    fingerprint): (dup_key, n_docs, min_id) for groups of size > 1; the
-    min_id is the canonical survivor."""
-    return (
-        df.select(key.alias("dup_key"), F.col(id_col).alias("id"))
-        .groupBy("dup_key")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("id").alias("keep_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
 
 def jaccard_pairs(shingles: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard-similar pairs (id_a < id_b, jac >= threshold) from a

@@ -10,8 +10,19 @@ checks are left/anti joins.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def dangling_term_message(field: str) -> Column:
+    """Column twin of ``rules.messages.msg_dangling_term`` for the value
+    in column ``field``: ``Couldn't find term '<v>' in ontology for field
+    '<field>'``."""
+    return F.concat(
+        F.lit("Couldn't find term '"),
+        F.col(field).cast("string"),
+        F.lit(f"' in ontology for field '{field}'"),
+    )
 
 
 def dangling_ref_violations(
@@ -37,11 +48,7 @@ def dangling_ref_violations(
             *keep,
             F.lit(field).alias("field"),
             F.lit("error").alias("severity"),
-            F.concat(
-                F.lit("Couldn't find term '"),
-                F.col(field).cast("string"),
-                F.lit(f"' in ontology for field '{field}'"),
-            ).alias("message"),
+            dangling_term_message(field).alias("message"),
         )
     )
 
@@ -192,10 +199,6 @@ def taxon_violations(
             *keep,
             F.lit(organism_col).alias("field"),
             F.lit("error").alias("severity"),
-            F.concat(
-                F.lit("Couldn't find term '"),
-                F.col(organism_col),
-                F.lit(f"' in ontology for field '{organism_col}'"),
-            ).alias("message"),
+            dangling_term_message(organism_col).alias("message"),
         )
     )

@@ -76,37 +76,3 @@ def duplicate_keys(df: DataFrame, key: str) -> DataFrame:
         .filter(F.col("n") > 1)
     )
 
-
-def uniqueness_violations(
-    df: DataFrame,
-    fields: list[str],
-    keep_cols: list[str],
-    max_broadcast_rows: int = DUP_BROADCAST_MAX_ROWS,
-) -> DataFrame:
-    """Long-form violation rows for all duplicated values of each field:
-    (keep_cols…, field, severity, message). The dup-table join-back is
-    size-gated (see :func:`gated_dup_table`)."""
-    keep = list(keep_cols)
-    outs = []
-    for fld in fields:
-        dups = gated_dup_table(duplicate_keys(df, fld), max_broadcast_rows)
-        v = (
-            df.join(dups, on=fld, how="inner")
-            .select(
-                *keep,
-                F.lit(fld).alias("field"),
-                F.lit("error").alias("severity"),
-                F.concat(
-                    F.lit(f"Field '{fld}' value '"),
-                    F.col(fld).cast("string"),
-                    F.lit("' occurs "),
-                    F.col("n").cast("string"),
-                    F.lit(" times but must be unique"),
-                ).alias("message"),
-            )
-        )
-        outs.append(v)
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out

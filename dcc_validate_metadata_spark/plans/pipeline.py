@@ -76,6 +76,7 @@ def build_violations(
     SURVEY.md §3.1 — collapse into one generated stage). The table
     is scanned with ``bytes`` pruned away; only the decode branch reads it.
     """
+    from ..operators.referential import dangling_term_message
     from ..operators.uniqueness import duplicate_keys, gated_dup_table
     from ..rules import messages as M
     from ..rules.compiler import compile_rule, explode_violations
@@ -149,11 +150,7 @@ def build_violations(
                     F.struct(
                         F.lit(fld).alias("field"),
                         F.lit("error").alias("severity"),
-                        F.concat(
-                            F.lit("Couldn't find term '"),
-                            F.col(fld).cast("string"),
-                            F.lit(f"' in ontology for field '{fld}'"),
-                        ).alias("message"),
+                        dangling_term_message(fld).alias("message"),
                     ),
                 )
             )
@@ -161,9 +158,6 @@ def build_violations(
     parts = [explode_violations(main, exprs, KEEP)]
     if ruleset.udf_rules:
         if gt is not None:
-            # ONE decode per row for structural + invariant checks: entropy
-            # decode dominates since jpeg became a real T.81 codec, and the
-            # split pair would decode (and scan `bytes`) twice
             parts.append(
                 fused_decode_violations(
                     df, gt, KEEP,

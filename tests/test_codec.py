@@ -105,3 +105,68 @@ def test_phash_deterministic_and_locality():
     h2 = codec.average_phash(out)
     ham = bin((h1 & (2**64 - 1)) ^ (h2 & (2**64 - 1))).count("1")
     assert ham <= 8
+
+
+def _zero_bomb(n_mb: int) -> bytes:
+    """A zlib stream of ``n_mb`` MiB of zeros, built 1 MiB at a time so
+    the test itself never holds the inflated size."""
+    import zlib
+
+    z = zlib.compressobj(9)
+    mib = bytes(1 << 20)
+    return b"".join(z.compress(mib) for _ in range(n_mb)) + z.flush()
+
+
+def test_inflate_is_bounded_by_declared_dims():
+    """A small stream declaring 4x4 pixels that inflates to 64 MiB must
+    fail as a size mismatch without ever holding the inflated payload:
+    PNG and FAKL inflate at most one byte past the declared size."""
+    import struct
+    import tracemalloc
+    import zlib
+
+    bomb = _zero_bomb(64)
+    ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0)
+    png = (
+        codec.encode_png(_img(0, h=4, w=4))[:8]
+        + codec._chunk(b"IHDR", ihdr)
+        + codec._chunk(b"IDAT", bomb)
+        + codec._chunk(b"IEND", b"")
+    )
+    fakl = b"FAKLbmp\x00" + struct.pack(">HH", 4, 4) + bomb
+    for data, msg in (
+        (png, "PNG scanline size mismatch"),
+        (fakl, "lossy payload size mismatch"),
+    ):
+        tracemalloc.start()
+        try:
+            with pytest.raises(ValueError, match=msg):
+                codec.decode_image(data)
+            _, peak = tracemalloc.get_traced_memory()
+        finally:
+            tracemalloc.stop()
+        assert peak < 8 << 20, (msg, peak)  # vs 64 MiB inflated
+    # a stream cut short is still a decode failure, with zlib's own text
+    cut = b"FAKLbmp\x00" + struct.pack(">HH", 2, 2) + zlib.compress(bytes(12))[:-4]
+    with pytest.raises(ValueError, match="incomplete or truncated stream"):
+        codec.decode_image(cut)
+
+
+def test_declared_dims_over_budget_fail_before_inflate():
+    import struct
+
+    from dcc_validate_metadata_spark.images.limits import MAX_DECODE_PIXELS
+
+    side = 1 << 16
+    assert side * side > MAX_DECODE_PIXELS
+    ihdr = struct.pack(">IIBBBBB", side, side, 8, 2, 0, 0, 0)
+    png = (
+        codec.encode_png(_img(0, h=4, w=4))[:8]
+        + codec._chunk(b"IHDR", ihdr)
+        + codec._chunk(b"IDAT", _zero_bomb(1))
+        + codec._chunk(b"IEND", b"")
+    )
+    fakl = b"FAKLbmp\x00" + struct.pack(">HH", side - 1, side - 1) + _zero_bomb(1)
+    for data in (png, fakl):
+        with pytest.raises(ValueError, match="over the decode budget"):
+            codec.decode_image(data)

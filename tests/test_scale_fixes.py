@@ -18,7 +18,7 @@ def test_duplicate_keys_heavy_dup_results(spark):
     dup-table size is under the threshold."""
     from dcc_validate_metadata_spark.operators.uniqueness import (
         duplicate_keys,
-        uniqueness_violations,
+        gated_dup_table,
     )
 
     # keys 0..999 appear once; 450 keys appear twice; 'hot' appears 1100x
@@ -33,13 +33,14 @@ def test_duplicate_keys_heavy_dup_results(spark):
     assert dups["d0"] == 2 and len(dups) == 451
 
     # small side of the gate: 451 dup keys < default threshold → broadcast
-    viol_small = uniqueness_violations(df, ["key"], keep_cols=["row_id"])
+    viol_small = df.join(gated_dup_table(duplicate_keys(df, "key")), on="key")
     assert "broadcast" in viol_small._jdf.queryExecution().logical().toString().lower()
     assert viol_small.count() == 900 + 1100
 
     # heavy side: force the threshold below the dup count → no broadcast
-    viol_heavy = uniqueness_violations(
-        df, ["key"], keep_cols=["row_id"], max_broadcast_rows=100
+    viol_heavy = df.join(
+        gated_dup_table(duplicate_keys(df, "key"), max_broadcast_rows=100),
+        on="key",
     )
     assert (
         "broadcast"

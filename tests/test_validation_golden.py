@@ -74,33 +74,21 @@ def test_run_validation_writes_and_resumes(spark, fixture_dir, tmp_path):
     assert r2.skipped_partitions == r1.verdicts.count()
 
 
-def test_fused_decode_equals_split_pair(spark, fixture_dir):
-    """fused_decode_violations (one decode per row) must emit exactly the
-    union of decode_check_violations + invariant_violations — the split
-    pair it replaced in the pipeline when gt is available."""
-    from dcc_validate_metadata_spark.images.invariants import (
-        decode_check_violations,
-        fused_decode_violations,
-        invariant_violations,
-    )
-    from dcc_validate_metadata_spark.plans.pipeline import KEEP
-    from dcc_validate_metadata_spark.rules import messages as M
-
-    gt = spark.read.parquet(str(fixture_dir / "image_caption_gt.parquet"))
+def test_violation_rows_exact_without_gt(spark, fixture_dir):
+    """Without ground truth the decode branch is the same batch body with
+    its gt checks off: the golden rows minus the caption-mismatch and
+    PSNR rows, exactly."""
+    ontology = spark.read.parquet(str(fixture_dir / "ontology_terms.parquet"))
     df = load_image_table(spark, fixture_dir / "image_caption")
-    msg = M.msg_mandatory_missing("bytes")
-    fused = fused_decode_violations(df, gt, KEEP, missing_msg=msg).toPandas()
-    split = pd.concat(
-        [
-            decode_check_violations(df, KEEP, missing_msg=msg).toPandas(),
-            invariant_violations(df, gt, KEEP).toPandas(),
-        ],
-        ignore_index=True,
+    got = build_violations(df, ontology=ontology).toPandas()
+    exp = pd.read_parquet(fixture_dir / "expected_violations.parquet")
+    gt_only = exp["message"].str.startswith(
+        ("Caption doesn't match ground truth for ", "Decoded image PSNR ")
     )
-    g = _norm(fused, VIOL_COLS)
-    e = _norm(split, VIOL_COLS)
-    assert len(g) > 0
-    pd.testing.assert_frame_equal(g, e)
+    assert gt_only.sum() > 0
+    pd.testing.assert_frame_equal(
+        _norm(got, VIOL_COLS), _norm(exp[~gt_only], VIOL_COLS)
+    )
 
 
 def test_decode_check_rebalance_without_image_id_kept(spark, fixture_dir):
