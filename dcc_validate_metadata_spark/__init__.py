@@ -17,4 +17,9 @@ streaming  : ingestion validation + windowed event-time stats
 queries    : driver/oracle query packs, REST-search + join-tree surfaces
 """
 
+from dcc_validate_metadata_spark import _zipimport_guard
+
+# every Python worker that runs engine code imports this package
+_zipimport_guard.install()
+
 __version__ = "0.1.0"

@@ -1,8 +1,9 @@
 """Measurement child for scripts/scaling_bench.py.
 
 Launched via ``spark-submit --master local[N] --py-files engine.zip``
-(the north-rule launch mode, BASELINE.json) — so the master and core
-count come from spark-submit, NOT from the engine's session factory.
+(the north-rule launch mode, BASELINE.json). The session comes from the
+engine's factory (``session.get_spark``) with the same ``local[N]`` and
+shuffle partitions = N, so it runs the engine's own conf.
 Runs the full validation pass (row rules + uniqueness +
 broadcast referential + Arrow decode checks) over a pre-generated
 image+caption table, warm-up first, then timed runs, and prints ONE
@@ -20,7 +21,7 @@ import sys
 import time
 import urllib.request
 
-from pyspark.sql import SparkSession
+from dcc_validate_metadata_spark.session import get_spark
 
 
 def _task_seconds(spark) -> float:
@@ -46,25 +47,12 @@ def main() -> None:
         int(sys.argv[4]),
     )
 
-    # same conf as dcc_validate_metadata_spark.session._BASE_CONF, but the
-    # master is whatever spark-submit set; shuffle partitions ≈ cores.
-    spark = (
-        SparkSession.builder.appName(f"scaling-worker-{cores}")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # decode-stage parallelism == input splits; 16m keeps the 0.8 GB
-        # 32x32 image table core-bound (see session._BASE_CONF rationale)
-        .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
-        .config("spark.sql.shuffle.partitions", str(cores))
-        # UI on: the REST API is the task-seconds source for the
-        # effective-parallelism breakdown (negligible overhead, measured)
-        .config("spark.ui.enabled", "true")
-        .getOrCreate()
+    # UI on: the REST API is the task-seconds source for the
+    # effective-parallelism breakdown (negligible overhead, measured)
+    spark = get_spark(
+        f"scaling-worker-{cores}",
+        master=f"local[{cores}]",
+        extra_conf={"spark.ui.enabled": "true"},
     )
 
     from dcc_validate_metadata_spark.plans.pipeline import build_violations

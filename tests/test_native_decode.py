@@ -321,6 +321,12 @@ rows = [_gen_row(i, 42, 4).data for i in range(40)]
 for data in rows:
     nat, py = codec.decode_image(data), codec._decode_image_python(data)
     assert nat[1] == py[1] and (nat[0] == py[0]).all()
+import importlib, zipimport
+importlib.invalidate_caches()  # the first call after import may re-read
+reads, stock = [], zipimport._read_directory
+zipimport._read_directory = lambda archive: reads.append(archive) or stock(archive)
+importlib.invalidate_caches()
+assert not reads, reads
 print("ok")
 """
 
@@ -328,7 +334,7 @@ print("ok")
 def test_native_path_from_zipped_package(tmp_path):
     """The ``--py-files`` mode: the package imported from a zip still
     compiles its shim (source read from inside the zip) and decodes
-    natively."""
+    natively, and import-cache invalidation re-reads no unchanged zip."""
     zpath = tmp_path / "engine.zip"
     with zipfile.ZipFile(zpath, "w") as zf:
         for f in (ROOT / "dcc_validate_metadata_spark").rglob("*"):
