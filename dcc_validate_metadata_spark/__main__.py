@@ -32,8 +32,6 @@ def _spark(app: str, master: str | None):
 
 
 def cmd_validate(args) -> int:
-    from pyspark.sql import functions as F  # noqa: F401
-
     from .plans.pipeline import run_validation
 
     spark = _spark("dcc-validate", args.master)
@@ -215,6 +213,13 @@ def cmd_validate_workbook(args) -> int:
     return 2 if status == "Fix issues" else 0
 
 
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="dcc_validate_metadata_spark")
     p.add_argument("--master", default=None, help="Spark master override")
@@ -233,7 +238,7 @@ def main(argv: list[str] | None = None) -> int:
     v.add_argument("--no-resume", action="store_true")
     v.add_argument("--stats", action="store_true")
     v.add_argument(
-        "--decode-rebalance", type=int, default=None, metavar="N",
+        "--decode-rebalance", type=_positive_int, default=None, metavar="N",
         help="hash-repartition the decode branch into N tasks before the "
         "Arrow stage — spreads megapixel rows that cluster in "
         "size-sorted storage layouts (costs a shuffle of the image "

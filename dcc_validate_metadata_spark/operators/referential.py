@@ -10,19 +10,10 @@ checks are left/anti joins.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def dangling_term_message(field: str) -> Column:
-    """Column twin of ``rules.messages.msg_dangling_term`` for the value
-    in column ``field``: ``Couldn't find term '<v>' in ontology for field
-    '<field>'``."""
-    return F.concat(
-        F.lit("Couldn't find term '"),
-        F.col(field).cast("string"),
-        F.lit(f"' in ontology for field '{field}'"),
-    )
+from ..rules import messages as M
 
 
 def dangling_ref_violations(
@@ -48,7 +39,7 @@ def dangling_ref_violations(
             *keep,
             F.lit(field).alias("field"),
             F.lit("error").alias("severity"),
-            dangling_term_message(field).alias("message"),
+            M.msg_dangling_term(F.col(field).cast("string"), field).alias("message"),
         )
     )
 
@@ -89,7 +80,7 @@ def subclass_violations(
     term must be a descendant of its species' breed-root node. Broadcast
     the closure, left join on (term, required root) — a NULL match means
     the term is NOT under the required subtree. Message per F6:
-    ``Breed '<text>' doesn't match the animal specie: '<species>'``."""
+    ``rules.messages.msg_breed``."""
     keep = list(keep_cols)
     cl = closure.select(
         F.col("term").alias("_cl_term"), F.col("ancestor").alias("_cl_anc")
@@ -107,12 +98,9 @@ def subclass_violations(
             *keep,
             F.lit(term_col).alias("field"),
             F.lit("error").alias("severity"),
-            F.concat(
-                F.lit("Breed '"),
+            M.msg_breed(
                 F.coalesce(F.col(text_col), F.lit("")),
-                F.lit("' doesn't match the animal specie: '"),
                 F.coalesce(F.col(species_col), F.lit("")),
-                F.lit("'"),
             ).alias("message"),  # coalesce: concat is null-propagating
         )
     )
@@ -141,14 +129,8 @@ def label_match_violations(
             *keep,
             F.lit(text_col).alias("field"),
             F.lit("warning").alias("severity"),
-            F.concat(
-                F.lit("Provided value '"),
-                F.col(text_col),
-                F.lit("' doesn't precisely match '"),
-                F.col("_label_raw"),
-                F.lit("' for term '"),
-                F.col(term_col),
-                F.lit("'"),
+            M.msg_ontology_label(
+                F.col(text_col), F.col("_label_raw"), F.col(term_col)
             ).alias("message"),
         )
     )
@@ -199,6 +181,8 @@ def taxon_violations(
             *keep,
             F.lit(organism_col).alias("field"),
             F.lit("error").alias("severity"),
-            dangling_term_message(organism_col).alias("message"),
+            M.msg_dangling_term(
+                F.col(organism_col).cast("string"), organism_col
+            ).alias("message"),
         )
     )

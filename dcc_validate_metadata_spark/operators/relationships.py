@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..rules import messages as M
+
 # material-pair whitelist, FAANG-shaped
 # (metadata_validation_conversion/constants.py:133-147 ALLOWED_RELATIONSHIPS)
 ALLOWED_RELATIONSHIPS: dict[str, list[str]] = {
@@ -54,9 +56,7 @@ def relationship_violations(edges: DataFrame) -> DataFrame:
         F.col("e.name").alias("name"),
         F.lit("parent").alias("field"),
         F.lit("error").alias("severity"),
-        F.concat(
-            F.lit("Relationships part: no entity '"), F.col("e.parent"), F.lit("' found")
-        ).alias("message"),
+        M.msg_no_entity(F.col("e.parent")).alias("message"),
     )
 
     joined = linked.join(p, F.col("e.parent") == F.col("p_name"), "inner")
@@ -76,13 +76,7 @@ def relationship_violations(edges: DataFrame) -> DataFrame:
         F.col("e.name").alias("name"),
         F.lit("parent").alias("field"),
         F.lit("error").alias("severity"),
-        F.concat(
-            F.lit("Relationships part: referenced entity '"),
-            F.col("p_name"),
-            F.lit("' does not match condition 'should be "),
-            F.array_join(F.col("_allowed"), ", "),
-            F.lit("'"),
-        ).alias("message"),
+        M.msg_material_pair(F.col("p_name"), F.col("_allowed")).alias("message"),
     )
 
     # organism-to-organism species equality (check_parents,
@@ -95,13 +89,7 @@ def relationship_violations(edges: DataFrame) -> DataFrame:
         F.col("e.name").alias("name"),
         F.lit("organism").alias("field"),
         F.lit("error").alias("severity"),
-        F.concat(
-            F.lit("Relationships part: the specie of the child '"),
-            F.col("e.organism"),
-            F.lit("' doesn't match the specie of the parent '"),
-            F.col("p_organism"),
-            F.lit("'"),
-        ).alias("message"),
+        M.msg_species_mismatch(F.col("e.organism"), F.col("p_organism")).alias("message"),
     )
 
     # mutual-parent cycle
@@ -109,13 +97,7 @@ def relationship_violations(edges: DataFrame) -> DataFrame:
         F.col("e.name").alias("name"),
         F.lit("parent").alias("field"),
         F.lit("error").alias("severity"),
-        F.concat(
-            F.lit("Relationships part: parent '"),
-            F.col("p_name"),
-            F.lit("' lists '"),
-            F.col("e.name"),
-            F.lit("' as its own parent"),
-        ).alias("message"),
+        M.msg_parent_cycle(F.col("e.name"), F.col("p_name")).alias("message"),
     )
 
     return dangling.unionByName(bad_pair).unionByName(species).unionByName(cycle)

@@ -76,7 +76,6 @@ def build_violations(
     SURVEY.md §3.1 — collapse into one generated stage). The table
     is scanned with ``bytes`` pruned away; only the decode branch reads it.
     """
-    from ..operators.referential import dangling_term_message
     from ..operators.uniqueness import duplicate_keys, gated_dup_table
     from ..rules import messages as M
     from ..rules.compiler import compile_rule, explode_violations
@@ -122,12 +121,8 @@ def build_violations(
                 F.struct(
                     F.lit(fld).alias("field"),
                     F.lit("error").alias("severity"),
-                    F.concat(
-                        F.lit(f"Field '{fld}' value '"),
-                        F.col(fld).cast("string"),
-                        F.lit("' occurs "),
-                        F.col(f"_dupn_{i}").cast("string"),
-                        F.lit(" times but must be unique"),
+                    M.msg_unique(
+                        fld, F.col(fld).cast("string"), F.col(f"_dupn_{i}").cast("string")
                     ).alias("message"),
                 ),
             )
@@ -150,7 +145,7 @@ def build_violations(
                     F.struct(
                         F.lit(fld).alias("field"),
                         F.lit("error").alias("severity"),
-                        dangling_term_message(fld).alias("message"),
+                        M.msg_dangling_term(F.col(fld).cast("string"), fld).alias("message"),
                     ),
                 )
             )

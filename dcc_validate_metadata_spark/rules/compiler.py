@@ -14,9 +14,9 @@ The rule array must never pass through a lambda (e.g. ``filter(arr,
 x -> x IS NOT NULL)``): a higher-order function is a ``CodegenFallback``,
 so Spark would interpret the whole rule tree under it row by row; the
 NULLs are filtered after the ``explode`` instead (:func:`explode_violations`).
-Message strings come exclusively from rules/messages.py and are built
-JVM-side with ``concat``/``format_string`` so they match the Python
-formatting byte-for-byte.
+Messages come from the ``msg_*`` functions in rules/messages.py, called
+with Column arguments: each returns one ``concat`` Column built from the
+same template as the Python string, so the two match byte-for-byte.
 """
 
 from __future__ import annotations
@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import messages as M
 from .constants import (
     DATE_UNIT_FORMATS,
     MISSING_VALUES,
@@ -44,7 +45,9 @@ VIOLATION_SCHEMA = T.StructType(
 )
 
 
-def _violation(field: str, severity: str, message: Column) -> Column:
+def _violation(field: str, severity: str, message: Column | str) -> Column:
+    if isinstance(message, str):
+        message = F.lit(message)
     return F.struct(
         F.lit(field).alias("field"),
         F.lit(severity).alias("severity"),
@@ -82,30 +85,19 @@ def compile_rule(rule: Rule, df: DataFrame, table: str) -> Column | None:
         if rule.tier == "mandatory":
             return F.when(
                 absent,
-                _violation(
-                    f,
-                    SEVERITY_ERROR,
-                    F.lit(f"Field '{f}' is mandatory but no value was provided"),
-                ),
+                _violation(f, SEVERITY_ERROR, M.msg_mandatory_missing(f)),
             )
         if rule.tier == "recommended":
             return F.when(
                 absent,
-                _violation(
-                    f,
-                    SEVERITY_WARNING,
-                    F.lit("This item is recommended but was not provided"),
-                ),
+                _violation(f, SEVERITY_WARNING, M.msg_recommended_missing()),
             )
         return None  # optional: absence is fine
 
     if rule.kind == "missing_tokens":
         matrix = MISSING_VALUES[rule.tier]
         token = F.lower(F.trim(c))
-        msg = F.lit(
-            f"Field '{f}' of '{table}' contains missing value that is not "
-            f"appropriate for this field"
-        )
+        msg = M.msg_missing_token(f, table)
         expr = None
         if matrix["errors"]:
             expr = F.when(
@@ -123,15 +115,7 @@ def compile_rule(rule: Rule, df: DataFrame, table: str) -> Column | None:
         pattern = p["pattern"]
         return F.when(
             present & ~c.rlike(pattern),
-            _violation(
-                f,
-                SEVERITY_ERROR,
-                F.concat(
-                    F.lit("Provided value '"),
-                    _sval(f),
-                    F.lit(f"' for field '{f}' doesn't match the pattern '{pattern}'"),
-                ),
-            ),
+            _violation(f, SEVERITY_ERROR, M.msg_regex(_sval(f), f, pattern)),
         )
 
     if rule.kind == "safe_name":
@@ -141,18 +125,9 @@ def compile_rule(rule: Rule, df: DataFrame, table: str) -> Column | None:
 
     if rule.kind == "enum":
         values = list(p["values"])
-        allowed_s = ", ".join(values)
         return F.when(
             present & ~c.isin(*values),
-            _violation(
-                f,
-                SEVERITY_ERROR,
-                F.concat(
-                    F.lit("Provided value '"),
-                    _sval(f),
-                    F.lit(f"' for field '{f}' is not one of [{allowed_s}]"),
-                ),
-            ),
+            _violation(f, SEVERITY_ERROR, M.msg_enum(_sval(f), f, values)),
         )
 
     if rule.kind == "numeric":
@@ -164,30 +139,14 @@ def compile_rule(rule: Rule, df: DataFrame, table: str) -> Column | None:
         # neither, and the regex pins both engine and golden to that
         return F.when(
             present & ~c.cast("string").rlike(NUMBER_RE),
-            _violation(
-                f,
-                SEVERITY_ERROR,
-                F.concat(
-                    F.lit("Provided value '"),
-                    _sval(f),
-                    F.lit(f"' for field '{f}' is not a valid number"),
-                ),
-            ),
+            _violation(f, SEVERITY_ERROR, M.msg_numeric(_sval(f), f)),
         )
 
     if rule.kind == "range":
         lo, hi = p["min"], p["max"]
         return F.when(
             present & ((c < F.lit(lo)) | (c > F.lit(hi))),
-            _violation(
-                f,
-                SEVERITY_ERROR,
-                F.concat(
-                    F.lit("Provided value '"),
-                    _sval(f),
-                    F.lit(f"' for field '{f}' is out of range [{lo}, {hi}]"),
-                ),
-            ),
+            _violation(f, SEVERITY_ERROR, M.msg_range(_sval(f), f, lo, hi)),
         )
 
     if rule.kind == "maxlen":
@@ -195,13 +154,7 @@ def compile_rule(rule: Rule, df: DataFrame, table: str) -> Column | None:
         return F.when(
             present & (F.length(c) > maxlen),
             _violation(
-                f,
-                SEVERITY_ERROR,
-                F.concat(
-                    F.lit(f"Field '{f}' length "),
-                    F.length(c).cast("string"),
-                    F.lit(f" exceeds maximum {maxlen}"),
-                ),
+                f, SEVERITY_ERROR, M.msg_maxlen(f, F.length(c).cast("string"), maxlen)
             ),
         )
 
@@ -220,16 +173,7 @@ def compile_rule(rule: Rule, df: DataFrame, table: str) -> Column | None:
             bad = bad | ((units == unit_name) & parse_fail)
         return F.when(
             present & bad,
-            _violation(
-                f,
-                SEVERITY_ERROR,
-                F.concat(
-                    F.lit("Date units: "),
-                    units,
-                    F.lit(" should be consistent with date value: "),
-                    c,
-                ),
-            ),
+            _violation(f, SEVERITY_ERROR, M.msg_date_unit(units, c)),
         )
 
     raise ValueError(f"not a row-level rule kind: {rule.kind}")

@@ -235,7 +235,7 @@ def ontology_violations_for(df, ruleset: Ruleset, lookups: dict, keep_cols: list
         dangling_ref_violations,
         label_match_violations,
     )
-    from . import messages as M  # noqa: F401  (message shapes documented there)
+    from . import messages as M
 
     keep = list(keep_cols)
     parts = []
@@ -263,7 +263,6 @@ def ontology_violations_for(df, ruleset: Ruleset, lookups: dict, keep_cols: list
                 valid = valid.filter(~F.col("term").isin(roots))
             valid = valid.select(F.lower("term").alias("_ok_term")).distinct()
             present = lookup.select(F.lower("term").alias("_t")).distinct()
-            roots_s = ", ".join(roots)
             parts.append(
                 df.filter(F.col(term_col).isNotNull())
                 # known term (dangling handled above, no double report) …
@@ -282,11 +281,7 @@ def ontology_violations_for(df, ruleset: Ruleset, lookups: dict, keep_cols: list
                     *keep,
                     F.lit(term_col).alias("field"),
                     F.lit("error").alias("severity"),
-                    F.concat(
-                        F.lit("Provided term '"),
-                        F.col(term_col),
-                        F.lit(f"' is not child of '{roots_s}'"),
-                    ).alias("message"),
+                    M.msg_graph_restriction(F.col(term_col), roots).alias("message"),
                 )
             )
     if not parts:
